@@ -98,19 +98,21 @@ def test_foreign_key_skew():
 
 
 def test_sequence_and_join(spark):
-    schema = [{"name": "arr", "class": "sequence", "length": 3,
-               "base": {"class": "int", "min": 0, "max": 10}},
-              {"name": "joined", "class": "join", "separator": "-",
-               "value": {"class": "sequence", "length": 3,
-                         "array": [{"class": "int", "min": 1, "max": 2},
-                                   {"class": "int", "min": 5, "max": 6},
-                                   {"class": "int", "min": 9, "max": 10}]}}]
-    cs = compile_schema(schema, seed=4)
-    df = cs.dataframe(spark, 50).collect()
-    for r in df:
-        assert len(r.arr) == 3
-        assert r.joined == "1-5-9"
-    compare_with_duckdb(cs.dataframe(spark, 50), cs.duckdb_sql(50))
+    # "'" must be escaped in the DuckDB separator literal too
+    for sep in ["-", "'"]:
+        schema = [{"name": "arr", "class": "sequence", "length": 3,
+                   "base": {"class": "int", "min": 0, "max": 10}},
+                  {"name": "joined", "class": "join", "separator": sep,
+                   "value": {"class": "sequence", "length": 3,
+                             "array": [{"class": "int", "min": 1, "max": 2},
+                                       {"class": "int", "min": 5, "max": 6},
+                                       {"class": "int", "min": 9, "max": 10}]}}]
+        cs = compile_schema(schema, seed=4)
+        df = cs.dataframe(spark, 50).collect()
+        for r in df:
+            assert len(r.arr) == 3
+            assert r.joined == sep.join(["1", "5", "9"])
+        compare_with_duckdb(cs.dataframe(spark, 50), cs.duckdb_sql(50))
 
 
 @pytest.mark.parametrize("cls", ["word", "text", "name", "address",
@@ -386,7 +388,8 @@ def test_markov_text_matches_python_walk(spark):
     """The Spark fold must replay MarkovChain.java's walk semantics:
     start at a (deterministically drawn) key, append a drawn successor,
     slide the key window — verified against a plain-Python walk over
-    the same compiled model and the same counter-RNG draws."""
+    the same compiled model and the same counter-RNG draws, and cell
+    for cell against the DuckDB replay (``Generated.sql()``)."""
     import duckdb
 
     from nifi_datasynthesizer_spark import synthesizers as SZ
@@ -394,33 +397,61 @@ def test_markov_text_matches_python_walk(spark):
     from nifi_datasynthesizer_spark.synthesizers import (_MARKOV_SEED, _i,
                                                          _markov_model)
 
-    words, seed, n = 18, 11, 50
-    keys, offs, cnts, ws, nks = _markov_model(_MARKOV_SEED, 3)
-    i = _i()
-    k0 = uint(i, salt_of("$.markov", seed, "k0"), 0, len(keys))
-    draws = [mix(i, salt_of("$.markov", seed, "d", j))
-             for j in range(words - 3)]
-    sel = ", ".join([k0.s + " AS k0"]
-                    + [f"{d.s} AS d{j}" for j, d in enumerate(draws)])
-    expected = []
-    for row in duckdb.sql(
-            f"SELECT {sel} FROM range(0, {n}) t(i) ORDER BY i").fetchall():
-        k, ds = row[0], row[1:]
-        text = keys[k].split(" ")
-        for d in ds:
-            if k < 0:
-                break
-            slot = offs[k] + d % cnts[k]
-            text.append(ws[slot])
-            k = nks[slot]
-        expected.append(" ".join(text))
+    n = 50
+    # (words, key_size, seed, max_chars)
+    for words, key_size, seed, max_chars in [(18, 3, 11, None),
+                                             (14, 2, 4, None),
+                                             (30, 3, 7, 60),
+                                             (25, 2, 9, 45)]:
+        keys, offs, cnts, ws, nks = _markov_model(_MARKOV_SEED, key_size)
+        i = _i()
+        k0 = uint(i, salt_of("$.markov", seed, "k0"), 0, len(keys))
+        draws = [mix(i, salt_of("$.markov", seed, "d", j))
+                 for j in range(words - key_size)]
+        sel = ", ".join([k0.s + " AS k0"]
+                        + [f"{d.s} AS d{j}" for j, d in enumerate(draws)])
+        expected = []
+        for row in duckdb.sql(
+                f"SELECT {sel} FROM range(0, {n}) t(i) ORDER BY i").fetchall():
+            k, ds = row[0], row[1:]
+            text = keys[k]
+            for d in ds:
+                if k < 0:
+                    break
+                slot = offs[k] + d % cnts[k]
+                if (max_chars is not None
+                        and len(text) + 1 + len(ws[slot]) > max_chars):
+                    break
+                text += " " + ws[slot]
+                k = nks[slot]
+            expected.append(text)
 
-    got = [r.message for r in
-           SZ.markov_text(n, words=words, seed=seed).df(spark)
-           .orderBy("rec_id").collect()]
-    assert got == expected
-    # texts branch (not one degenerate walk stamped everywhere)
-    assert len(set(got)) > 5
+        g = SZ.markov_text(n, words=words, key_size=key_size, seed=seed,
+                           max_chars=max_chars)
+        got = [r.message for r in g.df(spark).orderBy("rec_id").collect()]
+        assert got == expected, (words, key_size, seed, max_chars)
+        replay = [m for (m,) in duckdb.sql(
+            f"SELECT message FROM ({g.sql()}) ORDER BY rec_id").fetchall()]
+        assert got == replay, (words, key_size, seed, max_chars)
+        # texts branch (not one degenerate walk stamped everywhere)
+        assert len(set(got)) > 5
+
+
+def test_markov_seed_text_quoting(spark):
+    """Seed words containing a backslash or a quote generate the same
+    text in Spark as in the DuckDB replay (each side quotes its string
+    literals by its own rules)."""
+    import duckdb
+
+    from nifi_datasynthesizer_spark import synthesizers as SZ
+    seed_text = " ".join([r"C:\new path a C:\tmp and it's a C:\new",
+                          r"day it's a path and C:\tmp it's new"] * 3)
+    g = SZ.markov_text(40, words=10, key_size=1, seed=3, seed_text=seed_text)
+    got = [r.message for r in g.df(spark).orderBy("rec_id").collect()]
+    replay = [m for (m,) in duckdb.sql(
+        f"SELECT message FROM ({g.sql()}) ORDER BY rec_id").fetchall()]
+    assert got == replay
+    assert any("\\" in m for m in got) and any("'" in m for m in got)
 
 
 def test_markov_char_budget(spark):
