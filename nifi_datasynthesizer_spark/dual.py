@@ -198,10 +198,6 @@ def cast_long(d: D) -> D:
     return _cast(d, "BIGINT", "BIGINT")
 
 
-def cast_int(d: D) -> D:
-    return _cast(d, "INTEGER", "INT")
-
-
 def cast_double(d: D) -> D:
     return _cast(d, "DOUBLE", "DOUBLE")
 

@@ -3,8 +3,8 @@
 Reference surface: ``nifi-datasynthesizer-generators/src/main/java/com/
 mapr/synth/samplers/*.java`` (one Java class per schema ``class`` key,
 each drawing from a stateful ``java.util.Random``).  Here every sampler
-compiles to a pure, shuffle-free dual expression (Spark Column + DuckDB
-SQL) over the row index — see rng.py for why this is the right design
+compiles to a pure, shuffle-free dual expression (Spark SQL + DuckDB
+SQL text) over the row index — see rng.py for why this is the right design
 for a 1000-executor cluster.
 
 A sampler returns either:
@@ -36,9 +36,9 @@ class Ctx:
     column in a preceding select, which whole-stage codegen fuses away
     at runtime but which cuts Catalyst ANALYSIS from O(refs·|subtree|)
     to O(refs) (imei: 4.5 s → 0.1 s of driver time).  Contexts built
-    outside the schema compiler (synthesizers compose their own
-    selects) leave ``helpers`` as None and get the inline expression
-    back unchanged.
+    outside the schema compiler (the canned processors in
+    ``synthesizers``, which pass their own helper columns) leave
+    ``helpers`` as None and get the inline expression back unchanged.
     """
 
     def __init__(self, i: D, seed: int = 0, path: str = "$",
@@ -111,10 +111,6 @@ def _normal01(ctx: Ctx, k: int = 0) -> D:
     q = X.element(uint(ctx.i, ctx.salt("n01", k), 0, _N01_TABLE_SIZE),
                   _n01_table())
     return q
-
-
-def _digits(ctx: Ctx, tag: str, n: int) -> list[D]:
-    return [uint(ctx.i, ctx.salt(tag, j), 0, 10) for j in range(n)]
 
 
 def _join_str(parts: list[D], sep: str) -> D:
@@ -1179,10 +1175,6 @@ def _epoch_utc(datestr: str) -> int:
     import datetime as dt
     d = dt.datetime.strptime(datestr, "%Y-%m-%d %H:%M:%S")
     return int(d.replace(tzinfo=dt.timezone.utc).timestamp())
-
-
-def _flag(cond: D) -> D:
-    return X.when_chain([(cond, X.lit(1))], X.lit(0))
 
 
 def s_cpoc(spec, ctx):

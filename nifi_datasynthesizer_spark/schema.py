@@ -7,7 +7,8 @@ schema once into flat column expressions over ``spark.range(n)`` —
 generation is then a single narrow stage: no shuffle, no Python, full
 whole-stage codegen, linearly scalable to any row count / executor
 count.  ``duckdb_sql(n)`` returns the exact replay query used for the
-correctness oracle.
+correctness oracle.  The canned processors in ``synthesizers`` return
+the same :class:`CompiledSchema`.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import dual as X
 from .dual import D
 from .samplers import Ctx, compile_field
 
@@ -25,23 +27,41 @@ DEFAULT_ROWS_PER_PARTITION = 2_000_000
 
 
 class CompiledSchema:
+    """A generated table: named dual columns over the row index ``i``,
+    plus its DuckDB replay SQL (oracle mirror).
+
+    ``n`` is the default row count.  ``where`` is a row predicate
+    evaluated after the helper stage (it may reference helper names):
+    variable-length generators emit a fixed grid and mask the tail,
+    keeping generation a narrow map with no per-row explode.
+    """
+
     def __init__(self, columns: list[tuple[str, D]],
-                 helpers: dict[str, D] | None = None):
+                 helpers: dict[str, D] | None = None,
+                 n: int | None = None, where: D | None = None):
         self.columns = columns
-        # column-level CSE stage (Ctx.bind_col): helper columns are
-        # projected in a preceding select so a many-referenced value
-        # expression is ANALYZED once; whole-stage codegen fuses the
-        # two selects back into one stage at runtime
+        # column-level CSE stage (Ctx.bind_col, or a processor's named
+        # intermediates): helper columns are projected in a preceding
+        # select so a many-referenced value expression is ANALYZED once;
+        # Catalyst keeps the two projections apart when merging would
+        # duplicate non-cheap expressions, so it evaluates once per row
         self.helpers = helpers or {}
+        self.n = n
+        self.where = where
 
-    def _with_helpers(self, base: DataFrame) -> DataFrame:
-        if not self.helpers:
-            return base
+    def _select(self, base: DataFrame, extra=()) -> DataFrame:
+        if self.helpers:
+            base = base.select(
+                "*", *[d.c.alias(n) for n, d in self.helpers.items()])
+        if self.where is not None:
+            base = base.filter(self.where.c)
         return base.select(
-            "*", *[d.c.alias(n) for n, d in self.helpers.items()])
+            *extra, *[d.c.alias(name) for name, d in self.columns])
 
-    def dataframe(self, spark: SparkSession, n: int,
+    def dataframe(self, spark: SparkSession, n: int | None = None,
                   partitions: int | None = None) -> DataFrame:
+        if n is None:
+            n = self.n
         if partitions is None:
             # use every core as soon as n is non-trivial; above
             # ROWS_PER_PARTITION per core, grow the task count so a
@@ -49,17 +69,26 @@ class CompiledSchema:
             par = spark.sparkContext.defaultParallelism
             partitions = max(1, min(n, max(par, n // DEFAULT_ROWS_PER_PARTITION)))
         base = spark.range(0, n, 1, partitions).withColumnRenamed("id", "i")
-        return self._with_helpers(base).select(
-            *[d.c.alias(name) for name, d in self.columns])
+        return self._select(base)
 
-    def duckdb_sql(self, n: int) -> str:
+    def duckdb_sql(self, n: int | None = None) -> str:
+        if n is None:
+            n = self.n
         cols = ", ".join(f'{d.s} AS "{name}"' for name, d in self.columns)
         src = f"range(0, {n}) AS t(i)"
         if self.helpers:
             hcols = ", ".join(f'{d.s} AS "{n_}"'
                            for n_, d in self.helpers.items())
             src = f"(SELECT i, {hcols} FROM range(0, {n}) AS r(i)) AS t"
-        return f"SELECT {cols} FROM {src}"
+        q = f"SELECT {cols} FROM {src}"
+        if self.where is not None:
+            q += f" WHERE {self.where.s}"
+        return q
+
+    # processors are called as ``g.df(spark)`` / ``g.sql()``, schemas as
+    # ``cs.dataframe(spark, n)`` / ``cs.duckdb_sql(n)``; both spellings stay
+    df = dataframe
+    sql = duckdb_sql
 
     def project(self, df: DataFrame, index_col: str = "i",
                 keep: list[str] | None = None) -> DataFrame:
@@ -67,9 +96,8 @@ class CompiledSchema:
         row-index column (batch or streaming) — e.g. a rate source's
         ``value``.  ``keep`` passes through extra input columns."""
         base = df.withColumn("i", F.col(index_col).cast("long"))
-        extra = [F.col(c) for c in (keep or []) if c != "i"]
-        return self._with_helpers(base).select(
-            *extra, *[d.c.alias(name) for name, d in self.columns])
+        return self._select(
+            base, [F.col(c) for c in (keep or []) if c != "i"])
 
 
 def compile_schema(schema, seed: int = 0) -> CompiledSchema:
@@ -90,9 +118,7 @@ def compile_schema(schema, seed: int = 0) -> CompiledSchema:
             if spec.get("class") == "flatten" or "name" not in spec:
                 out.extend(r.items())           # lift to top level
             else:
-                # named struct field (lazy: no Spark session at compile time)
-                from . import dual as X
-                out.append((name, X.struct_(r)))
+                out.append((name, X.struct_(r)))  # named struct field
         else:
             out.append((name, r))
     return CompiledSchema(out, helpers)

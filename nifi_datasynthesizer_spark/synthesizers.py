@@ -2,9 +2,9 @@
 
 Each processor from ``nifi-datasynthesizer-processors/src/main/java/
 org/apache/nifi/datasynthesizer/processors/synthesizers/`` becomes a
-function returning a DataFrame.  All are built on the same pure
-column algebra as the schema compiler, so they parallelize without
-shuffle and replay exactly in DuckDB.
+function returning a :class:`~.schema.CompiledSchema` — the same
+generated-table type the schema compiler returns, so they parallelize
+without shuffle and replay exactly in DuckDB.
 
 Hierarchical outputs (device → readings) are produced by *index
 arithmetic* instead of explode: a grid of ``n_parent × n_child`` rows
@@ -45,80 +45,22 @@ from .samplers import (
     s_uuid,
     s_zip,
 )
+from .schema import CompiledSchema, compile_schema
 
 
 def _i() -> D:
     return D("i", "i")
 
 
-def _base(spark: SparkSession, n: int, partitions: int | None = None):
-    if partitions is None:
-        par = spark.sparkContext.defaultParallelism
-        partitions = max(1, min(n, max(par, n // 2_000_000)))
-    return spark.range(0, n, 1, partitions).withColumnRenamed("id", "i")
-
-
-class Generated:
-    """A generated table plus its DuckDB replay SQL (oracle mirror).
-
-    ``lets`` is an optional list of named intermediate bindings
-    evaluated in a FIRST projection; the output columns then reference
-    them by name (``_ref``).  This is the expression-level "let" the
-    string-composed dual layer otherwise lacks: a draw referenced k
-    times would inline its (md5-heavy) text k times, and generators
-    like weblog blow up to tens of KB of SQL — pure parse/analyze/
-    codegen overhead.  Catalyst keeps the two projections separate
-    when merging would duplicate non-cheap expressions (CollapseProject
-    cost check), so the let evaluates once per row at execution too.
-    """
-
-    def __init__(self, columns: list[tuple[str, D]], n: int,
-                 post_sql: str | None = None,
-                 lets: list[tuple[str, D]] | None = None,
-                 where: D | None = None):
-        self.columns = columns
-        self.n = n
-        self.post_sql = post_sql  # e.g. trailing ORDER BY
-        self.lets = lets or []
-        # row predicate evaluated AFTER the lets projection (may
-        # reference let names) — variable-length generators emit a
-        # fixed grid and mask the tail, keeping generation a narrow
-        # map with no per-row explode
-        self.where = where
-
-    def df(self, spark: SparkSession, partitions: int | None = None) -> DataFrame:
-        base = _base(spark, self.n, partitions)
-        if self.lets:
-            base = base.select(
-                F.col("i"), *[d.c.alias(name) for name, d in self.lets])
-        if self.where is not None:
-            base = base.filter(self.where.c)
-        return base.select(*[d.c.alias(name) for name, d in self.columns])
-
-    def sql(self, n: int | None = None) -> str:
-        src = f"range(0, {n or self.n}) AS t(i)"
-        if self.lets:
-            lcols = ", ".join(f'{d.s} AS "{name}"' for name, d in self.lets)
-            src = (f"(SELECT i, {lcols} FROM range(0, {n or self.n}) "
-                   f"AS t(i)) AS t")
-        cols = ", ".join(f'{d.s} AS "{name}"' for name, d in self.columns)
-        q = f"SELECT {cols} FROM {src}"
-        if self.where is not None:
-            q += f" WHERE {self.where.s}"
-        if self.post_sql:
-            q += " " + self.post_sql
-        return q
-
-
 def _ref(name: str) -> D:
-    """Reference a ``lets`` binding (or the row index) by column name."""
+    """Reference a helper column (or the row index) by column name."""
     return D(name, name)
 
 
 # ------------------------------------------------------------------ iot
 
 def iot_data_flat(n_devices: int = 100, readings: int = 100,
-                  seed: int = 0) -> Generated:
+                  seed: int = 0) -> CompiledSchema:
     """IotData.java + resources/generators/iot-data.json, flattened:
     one row per (device, reading).  device-id uuid, device-ip, home
     lat/lon from the zip universe, a 1/min arrival `time` and a
@@ -153,7 +95,7 @@ def iot_data_flat(n_devices: int = 100, readings: int = 100,
         ("time", _fmt_epoch_s(t, "yyyy-MM-dd HH:mm:ss")),
         ("temp", temp_d),
     ]
-    return Generated(cols, n)
+    return CompiledSchema(cols, n=n)
 
 
 def iot_data(spark: SparkSession, n_devices: int = 100, readings: int = 100,
@@ -169,17 +111,18 @@ def iot_data(spark: SparkSession, n_devices: int = 100, readings: int = 100,
 
 # ------------------------------------------------------------ telephony
 
-def phone_numbers(n: int, area_code: int | None = None, seed: int = 0) -> Generated:
+def phone_numbers(n: int, area_code: int | None = None,
+                  seed: int = 0) -> CompiledSchema:
     """PhoneNumber.java: {phone_number: 'NNN-NNN-NNNN'}."""
     ctx = Ctx(_i(), seed, "$.phone")
     spec = {"area_code": area_code} if area_code else {}
-    return Generated([("phone_number", s_phone(spec, ctx))], n)
+    return CompiledSchema([("phone_number", s_phone(spec, ctx))], n=n)
 
 
 def text_messages(n: int, source_area: int | None = None,
                   dest_area: int | None = None, words: int = 20,
                   seed: int = 0,
-                  markov_chars: int | None = None) -> Generated:
+                  markov_chars: int | None = None) -> CompiledSchema:
     """TextMessage.java: src/dst numbers + IMEIs, timestamp, message.
 
     ``markov_chars`` switches the message body to the reference's
@@ -197,18 +140,18 @@ def text_messages(n: int, source_area: int | None = None,
                              max_chars=markov_chars)
     else:
         msg = s_text({"length": words}, mctx)
-    return Generated([
+    return CompiledSchema([
         ("source_phone", s_phone({"area_code": source_area} if source_area else {}, sctx)),
         ("source_imei", s_imei({}, sctx)),
         ("destination_phone", s_phone({"area_code": dest_area} if dest_area else {}, dctx)),
         ("timestamp", _fmt_epoch_s(t, "yyyy-MM-dd HH:mm:ss")),
         ("message", msg),
-    ], n)
+    ], n=n)
 
 
 # ----------------------------------------------------------------- text
 
-def text_blocks(n: int, words: int = 100, seed: int = 0) -> Generated:
+def text_blocks(n: int, words: int = 100, seed: int = 0) -> CompiledSchema:
     """TextGenerator.java: free-form text records.  The reference uses
     a Markov chain over a seed corpus (processors/data/MarkovChain.java);
     we chain word picks through the hash of the previous word index so
@@ -230,7 +173,7 @@ def text_blocks(n: int, words: int = 100, seed: int = 0) -> Generated:
     joined = parts[0]
     for p in parts[1:]:
         joined = X.concat(joined, " ", p)
-    return Generated([("text", joined)], n)
+    return CompiledSchema([("text", joined)], n=n)
 
 
 # A small original seed corpus for the Markov generator (the reference
@@ -363,7 +306,7 @@ def markov_message(words: int = 24, key_size: int = 3, seed: int = 0,
 
 def markov_text(n: int, words: int = 24, key_size: int = 3,
                 seed: int = 0, seed_text: str | None = None,
-                max_chars: int | None = None) -> Generated:
+                max_chars: int | None = None) -> CompiledSchema:
     """TextGenerator.java / MarkovChain.java: Markov-chain text.
 
     The reference walks a ``key_size``-gram chain over a seed corpus
@@ -388,14 +331,14 @@ def markov_text(n: int, words: int = 24, key_size: int = 3,
     """
     rec = D("CAST(i AS BIGINT)", "CAST(i AS BIGINT)")
     msg = markov_message(words, key_size, seed, seed_text, max_chars)
-    return Generated([("rec_id", rec), ("message", msg)], n)
+    return CompiledSchema([("rec_id", rec), ("message", msg)], n=n)
 
 
 # -------------------------------------------------------------- finance
 
 def transactions(n_people: int = 100, max_tx: int = 5,
                  n_terminals: int = 50, invalid_rate: float = 0.05,
-                 seed: int = 0) -> Generated:
+                 seed: int = 0) -> CompiledSchema:
     """Transactions.java: credit-card transactions.
 
     Flat grid n_people × max_tx; per-row keep-probability emulates the
@@ -430,8 +373,7 @@ def transactions(n_people: int = 100, max_tx: int = 5,
         ("is_valid", X.when_chain([(is_invalid, X.lit(False))], X.lit(True))),
         ("__keep", keep),
     ]
-    g = Generated(cols, n)
-    return g
+    return CompiledSchema(cols, n=n)
 
 
 def transactions_df(spark: SparkSession, **kw) -> DataFrame:
@@ -439,9 +381,8 @@ def transactions_df(spark: SparkSession, **kw) -> DataFrame:
     return g.df(spark).filter(F.col("__keep")).drop("__keep")
 
 
-def transactions_sql(n: int | None = None, **kw) -> str:
-    g = transactions(**kw)
-    inner = g.sql(n)
+def transactions_sql(**kw) -> str:
+    inner = transactions(**kw).sql()
     return (f'SELECT * EXCLUDE ("__keep") FROM ({inner}) WHERE "__keep"')
 
 
@@ -578,7 +519,6 @@ def correlate(input_df: DataFrame, schema, key_col: str, universe: int,
     from pyspark.sql.functions import broadcast
 
     from .phash import h60
-    from .schema import compile_schema
 
     spark = input_df.sparkSession
     key_field = {"name": "__corr_i", "class": "id"}
@@ -597,7 +537,6 @@ def correlate_sql(table: str, schema, key_col: str, universe: int,
                   seed: int = 0, prefix: str = "corr_") -> str:
     """DuckDB oracle mirror of :func:`correlate` over a registered view."""
     from .phash import h60_sql
-    from .schema import compile_schema
 
     key_field = {"name": "__corr_i", "class": "id"}
     cs = compile_schema([key_field] + list(schema), seed)
@@ -644,7 +583,6 @@ _CPOC_DEFAULTS = {
 
 def _cpoc_parts(n_users: int, max_tx: int, seed: int):
     from .samplers import _epoch_utc
-    from .schema import compile_schema
     schema = [{"name": "user_id", "class": "id"},
               {"class": "common-point-of-compromise",
                "maxTransactions": max_tx, **_CPOC_DEFAULTS}]
@@ -793,7 +731,7 @@ def _pareto_rank(u: D, tail_pow: int, universe: int) -> D:
 
 
 def weblog(n_users: int = 500, events_per_user: int = 20,
-           seed: int = 0) -> Generated:
+           seed: int = 0) -> CompiledSchema:
     """LogGenerator.java web/query-log family: correlated log lines
     with per-user sticky identity and long-tail query terms.
 
@@ -828,12 +766,12 @@ def weblog(n_users: int = 500, events_per_user: int = 20,
     uctx = Ctx(user, seed, "$.weblog.user")
     lctx = Ctx(i, seed, "$.weblog.line")
 
-    # ---- let layer: every draw referenced more than once binds to a
-    # named intermediate (Generated.lets).  Before this, ip_rank's
+    # ---- helper stage: every draw referenced more than once binds to
+    # a named helper column (CompiledSchema.helpers).  Before this, ip_rank's
     # text appeared 8× inside the dotted quad and each term rank 3×
     # (word syllables + slow test) — ~50 KB of SQL whose parse/analyze/
     # codegen dominated the query (~6 s plan + first-run compile for
-    # 10k rows).  The let layer holds the md5 algebra once.
+    # 10k rows).  The helper stage holds the md5 algebra once.
     new_draw = u01(i, lctx.salt("sess"))
     is_new = X.when_chain([(j.eq(0), X.lit(1)),
                            (new_draw < 0.25, X.lit(1))], X.lit(0))
@@ -932,7 +870,7 @@ def weblog(n_users: int = 500, events_per_user: int = 20,
         ("query", query),
         ("response_us", response_us),
     ]
-    return Generated(cols, n, lets=lets)
+    return CompiledSchema(cols, helpers=dict(lets), n=n)
 
 
 # --------------------------------------------------------- purchase log
@@ -944,7 +882,7 @@ _PL_HOT_TERMS = (V.WORDS[303], V.WORDS[777])
 
 
 def purchase_log(n_users: int = 300, max_hits: int = 128,
-                 seed: int = 0) -> Generated:
+                 seed: int = 0) -> CompiledSchema:
     """PurchaseLog.java web purchase logs (reference
     nifi-datasynthesizer-generators/src/main/java/com/mapr/
     PurchaseLog.java:52-131 with resources user-schema.txt and
@@ -1050,7 +988,7 @@ def purchase_log(n_users: int = 300, max_hits: int = 128,
         ("search_keywords", kw),
         ("event_list", events),
     ]
-    return Generated(cols, n, lets=lets, where=(j_r < nh_r))
+    return CompiledSchema(cols, helpers=dict(lets), n=n, where=(j_r < nh_r))
 
 
 def remove_record_path(df: DataFrame, path: str) -> DataFrame:

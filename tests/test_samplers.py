@@ -389,7 +389,7 @@ def test_markov_text_matches_python_walk(spark):
     start at a (deterministically drawn) key, append a drawn successor,
     slide the key window — verified against a plain-Python walk over
     the same compiled model and the same counter-RNG draws, and cell
-    for cell against the DuckDB replay (``Generated.sql()``)."""
+    for cell against the DuckDB replay (``CompiledSchema.sql()``)."""
     import duckdb
 
     from nifi_datasynthesizer_spark import synthesizers as SZ
@@ -496,3 +496,14 @@ def test_purchase_log_boost_semantics():
                       "SELECT user_id, COUNT(*) AS cnt FROM t GROUP BY user_id)"
                       ).fetchone()[0]
     assert nper > 5
+
+
+def test_synth_processor_replay_row_count():
+    """A processor's replay honours an explicit row count, 0 included,
+    and falls back to the bound ``n`` only when none is given."""
+    from nifi_datasynthesizer_spark import synthesizers as SZ
+    g = SZ.phone_numbers(50, seed=1)
+    count = "SELECT COUNT(*) FROM ({})"
+    assert duckdb.sql(count.format(g.sql(0))).fetchone()[0] == 0
+    assert duckdb.sql(count.format(g.sql(7))).fetchone()[0] == 7
+    assert duckdb.sql(count.format(g.sql())).fetchone()[0] == 50

@@ -25,8 +25,10 @@ def _file_stream(spark, tmp_path, df, schema):
 
 
 def test_project_streaming_matches_batch(spark, tmp_path):
-    """Streaming synthesis over an index column == batch synthesis."""
-    cs = compile_schema(SCHEMA, seed=11)
+    """Streaming synthesis over an index column == batch synthesis,
+    including a field (imei) that projects through the helper stage."""
+    cs = compile_schema(SCHEMA + [{"name": "imei", "class": "imei"}], seed=11)
+    assert cs.helpers
     idx = spark.range(0, 300).select(
         F.col("id").alias("value"),
         F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("event_time"))
