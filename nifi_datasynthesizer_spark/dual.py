@@ -21,6 +21,13 @@ Window sums and higher-order folds are written as SQL text too
 (``OVER``, ``transform``/``aggregate`` lambdas), so every generated
 column takes this one path.
 
+Lookup tables (quantile tables, vocabularies, zip records, Markov
+transition arrays) have one Spark encoding, :func:`table`: one
+``split`` node over the table's text, which Catalyst folds to one
+array literal.  Plan cost is per node, not per character — an inline
+``array(v1, ..., vN)`` is N nodes that every request analyses again.
+The DuckDB side inlines tables as list literals.
+
 Only operations with identical semantics in both engines are exposed.
 Notably:
 
@@ -37,6 +44,8 @@ Notably:
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -103,7 +112,9 @@ class D:
         # Memoized: a Column is an immutable JVM expression handle, and
         # a compiled schema is planned again on every request
         # (SchemaRegistry, CompiledSchema.dataframe) — each re-use skips
-        # re-parsing the (often 10+ KB) SQL text.
+        # re-parsing the SQL text.  A lookup table is one string literal
+        # (``table``), so that parse is short; the memo cannot skip
+        # analysis, which each new plan does again.
         if self._cc is None:
             self._cc = F.expr(self.ss)
         return self._cc
@@ -270,12 +281,53 @@ def hex_to_long(d: D) -> D:
              f"CAST(conv({d.ss}, 16, 10) AS BIGINT)")
 
 
+def table(values: list) -> str:
+    """Spark SQL for a python list as ONE folded literal node.
+
+    ``split('<v1><sep><v2>...', '<sep>', -1)``, cast to ``array<bigint>``
+    or ``array<double>`` for numbers, is one foldable expression over
+    one string literal: Catalyst folds it to one array ``Literal`` at
+    optimisation time, so a table's size costs no plan nodes.  ``split``
+    is also the one foldable form whose string elements are non-null;
+    ``from_json``'s are nullable, which made every column built on a
+    lookup nullable, its generated code larger and 2M-row generation
+    about 10% slower.  (A numeric table's CAST types its elements
+    nullable; :func:`element` restores a non-null result.)  Element
+    type: all ``str`` → ``array<string>``, any ``float`` →
+    ``array<double>`` (ints written as floats), otherwise
+    ``array<bigint>``.  Under ANSI casts (Spark's default) a malformed
+    number raises instead of folding to null.
+    """
+    if not values:
+        raise ValueError("empty value list")
+    if all(isinstance(v, str) for v in values):
+        used = set().union(*values)
+        sep = next((chr(c) for c in range(1, 32) if chr(c) not in used), None)
+        if sep is None:
+            raise ValueError("no free separator: every control character "
+                             "occurs in the table")
+        esc = "\\u%04x" % ord(sep)
+        return (f"split({_spark_sq(sep.join(values)).replace(sep, esc)}, "
+                f"'{esc}', -1)")
+    if all(isinstance(v, int) and not isinstance(v, bool) for v in values):
+        return f"CAST(split('{','.join(map(str, values))}', ',') AS array<bigint>)"
+    if not all(isinstance(v, (int, float)) and not isinstance(v, bool)
+               for v in values):
+        raise TypeError(f"not a str/int/float table: {values[:8]!r}")
+    values = [float(v) for v in values]
+    if not all(math.isfinite(v) for v in values):
+        raise ValueError("non-finite value in a literal table")
+    return f"CAST(split('{','.join(map(repr, values))}', ',') AS array<double>)"
+
+
 def element(idx0: D, values: list) -> D:
     """Pick ``values[idx0]`` (0-based index expr) from a python list.
 
-    Spark: literal array + element_at (1-based) — constant-folded by
-    Catalyst into one array literal.  DuckDB: list literal subscript
-    (1-based).
+    Spark: ``element_at`` (1-based) over the :func:`table` literal —
+    one node that Catalyst constant-folds into one array literal; an
+    inline ``array(...)`` would cost an N-child ``CreateArray`` of
+    analysis on every request.  DuckDB: list literal subscript
+    (1-based).  The Spark result is non-null, like the values.
     """
     if not values:
         raise ValueError("empty value list")
@@ -286,13 +338,13 @@ def element(idx0: D, values: list) -> D:
         # DuckDB infers DECIMAL[] from fixed-point literals; force DOUBLE[]
         # so downstream arithmetic matches Spark's double semantics
         arr_sql = f"CAST({arr_sql} AS DOUBLE[])"
-    def _spark_item(v):
-        if isinstance(v, str):
-            return _spark_sq(v)
-        return _spark_num(v)
-    spark_arr = "array(" + ", ".join(_spark_item(v) for v in values) + ")"
-    return D(f"({arr_sql})[CAST(({idx0.s} + 1) AS BIGINT)]",
-             f"element_at({spark_arr}, CAST(({idx0.ss} + 1) AS INT))")
+    ss = f"element_at({table(values)}, CAST(({idx0.ss} + 1) AS INT))"
+    if not isinstance(values[0], str):
+        # a numeric table comes out of a CAST, typed with nullable
+        # elements; the never-taken fallback keeps the column non-null
+        v0 = float(values[0]) if has_float else values[0]
+        ss = f"coalesce({ss}, {_spark_num(v0)})"
+    return D(f"({arr_sql})[CAST(({idx0.s} + 1) AS BIGINT)]", ss)
 
 
 def when_chain(pairs: list[tuple[D, D]], otherwise: D) -> D:

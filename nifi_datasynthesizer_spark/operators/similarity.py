@@ -437,13 +437,13 @@ def knn_graph(emb: DataFrame, k: int = 5, bucket_bits: int = 6,
              F.col("v"), bucket_bits, seed)))
     b = _pin(b)
     b.count()
-    l, r = b.alias("l"), b.alias("r")
-    half = (l.join(r, (F.col("l.bucket") == F.col("r.bucket"))
-                   & (F.col("l.vec_id") < F.col("r.vec_id")))
-            .select(F.col("l.vec_id").alias("a"),
-                    F.col("r.vec_id").alias("b"),
-                    F.round(dot("l.v", "r.v"), 6)
-                    .alias("cosine")))
+    # plain column names on each side: dot takes its unrolled codegen
+    # path only for bare identifiers; an alias-qualified "l.v" gets the
+    # interpreted zip_with fold in this hot pair loop
+    l = b.select(F.col("vec_id").alias("a"), F.col("v").alias("va"), "bucket")
+    r = b.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"), "bucket")
+    half = (l.join(r, "bucket").filter(F.col("a") < F.col("b"))
+            .select("a", "b", F.round(dot("va", "vb"), 6).alias("cosine")))
     # single-pass symmetric closure: each half-space pair EXPLODES
     # into its two directed edges — the union-of-projections form
     # referenced `half` twice, and Catalyst does not dedupe repeated

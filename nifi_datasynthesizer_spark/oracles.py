@@ -16,6 +16,8 @@ band hash — identical output absent a 60-bit hash collision.
 
 from __future__ import annotations
 
+import re
+
 from .operators.similarity import hyperplane_weights
 from .phash import h60_sql
 
@@ -1430,7 +1432,10 @@ def _ivfpq_chain(queries_pred: str, n_cells: int, n_probe: int, m: int,
     x + coarse k-means chain (_km_parts) + residual CTE + PQ chain
     sourced from the residuals; probe gating is the per-query
     top-n_probe cells, and ADC distances use the query's residual in
-    the PROBED cell against the residual codebooks."""
+    the PROBED cell against the residual codebooks.  Every CTE is
+    ``AS MATERIALIZED``: planned inline, the chain ran DuckDB out of
+    memory (~12.5 GiB at sf0.001); materialized, each IVF-PQ oracle
+    runs within a 4 GB DuckDB memory limit."""
     km = _km_parts(n_cells, coarse_iters, dim, fit=fit_mod is not None)
     pq, sub = _pq_parts(m, k, iters, dim, table, src="xres",
                         fit=fit_mod is not None)
@@ -1478,7 +1483,8 @@ scored AS (SELECT q.query_id, codes.cand_id,
                 JOIN codes ON codes.cand_id = asg.vec_id
                 {bjoins}
            WHERE codes.cand_id <> q.query_id)""")
-    return parts
+    return [re.sub(r"(^|,\n)(\w+) AS \(", r"\1\2 AS MATERIALIZED (", p)
+            for p in parts]
 
 
 def ivfpq_search_sql(queries_pred: str = "vec_id < 5", k_top: int = 10,

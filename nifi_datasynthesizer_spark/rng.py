@@ -109,14 +109,15 @@ def table_lookup(slot: D, table: list) -> D:
 
     A quantized weight table is ``table_size`` entries but only a few
     DISTINCT values in contiguous runs (quantize_weights fills values
-    sequentially), so inlining it as an array literal costs
-    ``table_size × len(value)`` characters of SQL — for a handful of
-    OS/browser strings that was ~21 KB per column of pure parse/
-    analyze/codegen overhead.  When the run count is small, the exact
-    same selection renders as a threshold sum: ``distinct[Σ (slot >=
-    run_start)]`` — a few hundred characters.  Falls back to the flat
-    array when there are many runs (foreign-key/zipf tables), where
-    thresholds would be O(runs) comparisons per row.
+    sequentially), so inlining it as a list literal costs
+    ``table_size × len(value)`` characters of SQL.  When the run count
+    is small, the exact same selection renders as a threshold sum:
+    ``distinct[Σ (slot >= run_start)]`` — a few hundred characters.
+    Falls back to the flat table when there are many runs
+    (foreign-key/zipf tables), where thresholds would be O(runs)
+    comparisons per row.  Spark plans either form as one folded
+    :func:`dual.table` literal, so the run encoding now only keeps the
+    DuckDB replay text short.
     """
     runs: list[tuple[int, object]] = []       # (first slot, value)
     for k, v in enumerate(table):

@@ -7,6 +7,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory(master: str, phys_bytes: int) -> str:
+    """``spark.driver.memory`` when SPARK_DRIVER_MEMORY is unset.
+
+    In local mode the "driver" heap IS the executor heap for every
+    worker thread, so size it for the machine, not for a thin cluster
+    driver (8g across 32 threads = 256 MB each, pure GC pressure on a
+    128 GiB box) — but never past half of physical memory, where the
+    kernel OOM-kills the JVM instead of the JVM collecting garbage.
+    Capped at 24g.
+    """
+    if not master.startswith("local"):
+        return "8g"
+    return f"{min(24 * 1024, phys_bytes // 2 // 2 ** 20)}m"
+
+
 def get_spark(app: str = "nifi-datasynthesizer-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -33,14 +48,11 @@ def get_spark(app: str = "nifi-datasynthesizer-spark",
          .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
          # Arrow for every pandas-UDF boundary
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         # in local mode the "driver" heap IS the executor heap for
-         # every worker thread — size it for the thread count, not for
-         # a thin cluster driver (8g across 32 threads = 256 MB each,
-         # pure GC pressure on a 128 GiB box)
          .config("spark.driver.memory",
-                 os.environ.get("SPARK_DRIVER_MEMORY",
-                                "24g" if master.startswith("local")
-                                else "8g"))
+                 os.environ.get("SPARK_DRIVER_MEMORY") or
+                 _default_driver_memory(
+                     master, os.sysconf("SC_PAGE_SIZE")
+                     * os.sysconf("SC_PHYS_PAGES")))
          # every codegen'd stage is a generated class; a long session
          # running ~100 distinct queries fills the JVM's default 240 MB
          # code cache, after which the JIT disables itself and late

@@ -24,7 +24,7 @@ import math
 
 from . import dual as X
 from . import vocab as V
-from .dual import D, _spark_sq, _sq
+from .dual import D, _sq
 from .rng import pick, pick_weighted, quantize_weights, u01, uint
 from .samplers import (
     EPOCH_2013_08_01_S,
@@ -255,12 +255,13 @@ def markov_message(words: int = 24, key_size: int = 3, seed: int = 0,
     k0 = uint(i, salt_of("$.markov", seed, "k0"), 0, len(keys))
     draws = [mix(i, salt_of("$.markov", seed, "d", j)) for j in range(steps)]
 
-    # Spark: the transition arrays bound once through a 1-element-array
-    # transform, then one aggregate over the draws.  Lambda names are
-    # fixed and reserved — drawing them from dual.bind's counter would
-    # shift every later __bN name, and with it the DuckDB text.
-    arr_i = lambda xs: "array(%s)" % ",".join(f"{x}L" for x in xs)
-    arr_s = lambda xs: "array(%s)" % ",".join(_spark_sq(x) for x in xs)
+    # Spark: the transition arrays — each one dual.table literal node,
+    # folded once per plan — bound once through a 1-element-array
+    # transform (the fold reads each several times; bound, each
+    # table's text appears once), then one aggregate over the draws.
+    # Lambda names are fixed and reserved — drawing them from
+    # dual.bind's counter would shift every later __bN name, and with
+    # it the DuckDB text.
     m, acc, dr = "__mk_m", "__mk_a", "__mk_d"
     sk0 = f"CAST({k0.ss} AS BIGINT)"
     sidx = f"CAST({acc}.k + 1 AS INT)"
@@ -271,8 +272,9 @@ def markov_message(words: int = 24, key_size: int = 3, seed: int = 0,
                f"WHEN length({acc}.t) + 1 + length({sword}) > {max_chars} "
                f"THEN named_struct('k', CAST(-1 AS BIGINT), 't', {acc}.t) ")
     ssql = (f"element_at(transform(array(named_struct("
-            f"'o', {arr_i(offs)}, 'c', {arr_i(cnts)}, 'nk', {arr_i(nks)}, "
-            f"'w', {arr_s(ws)}, 'kt', {arr_s(keys)})), {m} -> aggregate("
+            f"'o', {X.table(offs)}, 'c', {X.table(cnts)}, "
+            f"'nk', {X.table(nks)}, 'w', {X.table(ws)}, "
+            f"'kt', {X.table(keys)})), {m} -> aggregate("
             f"array({', '.join(d.ss for d in draws)}), "
             f"named_struct('k', {sk0}, 't', "
             f"element_at({m}.kt, CAST({sk0} + 1 AS INT))), "
@@ -322,10 +324,11 @@ def markov_text(n: int, words: int = 24, key_size: int = 3,
     Spark-first shape: the chain is compiled driver-side into flat
     transition arrays (plan constants, like the LSH hyperplanes); each
     row folds its pre-drawn counter-RNG values through one Spark SQL
-    ``aggregate`` whose state is (key index, text so far).  The
-    transition arrays are bound ONCE via the 1-element-array transform
-    (HOF lambdas re-evaluate referenced subtrees per element — an
-    unbound 2000-literal array would be rebuilt per step per row).
+    ``aggregate`` whose state is (key index, text so far).  Each
+    transition array is one :func:`dual.table` literal, folded once per
+    plan, and the five are bound ONCE via the 1-element-array
+    transform, so a table's text appears once although the fold reads
+    it several times per step.
     Both sides are SQL text, like every other dual expression; the
     DuckDB mirror is the same fold via ``list_reduce``.
     """

@@ -844,6 +844,22 @@ def test_r11opt_knn_graph_single_pass(spark):
     release_caches()
 
 
+def test_knn_graph_dot_takes_unrolled_path(spark):
+    """embed_knn_graph scores its candidate pairs with similarity.dot's
+    unrolled EMBED_DIM-term sum (whole-stage codegen), not the
+    interpreted zip_with fold: the join sides are projected to plain
+    names (va/vb), which dot's identifier gate accepts, where the
+    alias-qualified "l.v"/"r.v" fell back to the fold."""
+    import re
+    from nifi_datasynthesizer_spark.operators.dedup import release_caches
+    from nifi_datasynthesizer_spark.operators.similarity import EMBED_DIM
+    df = entrymod.queries()["embed_knn_graph"](spark, SF)
+    p = df._jdf.queryExecution().optimizedPlan().toString()
+    last_term = rf"\bva#\d+\[{EMBED_DIM - 1}\]"
+    assert re.search(last_term, p), "knn_graph dot lost its fast path"
+    release_caches()
+
+
 def test_r11opt_column_stats_sketch_flat_construction(spark):
     """r11 optimization regression: sketch-mode column_stats builds
     its m·#cols register aggregates as ONE selectExpr batch and its

@@ -20,6 +20,7 @@ def test_table_lookup_threshold_equals_flat():
                       ).fetchall() == [("x",)]
 
 import duckdb
+import pytest
 
 from nifi_datasynthesizer_spark import compile_schema
 
@@ -77,3 +78,67 @@ def test_partitioning_invariance(spark):
     one = sorted(map(tuple, cs.dataframe(spark, 5000, partitions=1).collect()))
     many = sorted(map(tuple, cs.dataframe(spark, 5000, partitions=17).collect()))
     assert one == many
+
+
+def test_table_round_trips_bit_exact(spark):
+    """dual.table's one literal node folds to exactly the python
+    values: the largest quantile tables, the zip coordinates, int64
+    extremes and a string table with every quoting hazard of the text
+    inside a Spark string literal, plus a control character (the
+    separator must avoid it)."""
+    from nifi_datasynthesizer_spark import vocab as V
+    from nifi_datasynthesizer_spark.dual import table
+    from nifi_datasynthesizer_spark.samplers import _EXP_QUANTILES, _n01_table
+    floats = [_n01_table(), _EXP_QUANTILES, V.ZIP_LATS, V.ZIP_LONS,
+              [1, -0.0, 2.5]]
+    ints = [0, -1, 2 ** 63 - 1, -2 ** 63]
+    strs = ["it's", "back\\slash", 'a "quote"', "line\nbreak",
+            "naïve 東京 😀", "", "\x01\\u0001", ""]
+    row = spark.sql("SELECT " + ", ".join(
+        f"{table(t)} AS t{k}"
+        for k, t in enumerate(floats + [ints, strs]))).first()
+    for k, t in enumerate(floats):
+        assert [x.hex() for x in row[k]] == [float(v).hex() for v in t], k
+    assert list(row[len(floats)]) == ints
+    assert list(row[len(floats) + 1]) == strs
+
+
+def test_table_types_and_rejects():
+    from nifi_datasynthesizer_spark.dual import table
+    assert table(["a", "b"]).startswith("split(")
+    assert table([1, 2]).endswith("AS array<bigint>)")
+    assert "'1.0,2.5', ',') AS array<double>)" in table([1, 2.5])
+    for bad in ([], [True, 1], [1.0, float("nan")], [float("inf")],
+                ["a", 1], ["".join(map(chr, range(1, 32)))]):
+        with pytest.raises((TypeError, ValueError)):
+            table(bad)
+
+
+def test_table_constant_folded(spark):
+    """Every lookup table of a basic-style schema (normal/gamma
+    quantiles, names, words, a foreign key) reaches the analyser as
+    split and leaves the optimiser as a folded literal with non-null
+    elements: a split left in the optimised plan would re-parse the
+    table for every row, and nullable elements would make the columns
+    nullable and the generated code slower."""
+    cs = compile_schema([
+        {"name": "score", "class": "normal", "mean": 100, "sd": 15},
+        {"name": "wait", "class": "gamma", "alpha": 3, "beta": 2},
+        {"name": "who", "class": "name"},
+        {"name": "fav", "class": "word"},
+        {"name": "fk", "class": "foreign-key", "size": 500, "skew": 1},
+    ], seed=3)
+    df = cs.dataframe(spark, 10, partitions=1)
+    qe = df._jdf.queryExecution()
+    assert "split(" in qe.analyzed().toString()
+    assert "split(" not in qe.optimizedPlan().toString()
+    assert [f.name for f in df.schema if f.nullable] == []
+
+
+def test_table_malformed_raises(spark):
+    """A malformed number fails the query (ANSI cast, Spark's default)
+    instead of folding to a null element."""
+    from nifi_datasynthesizer_spark.dual import table
+    bad = table([1, 2]).replace("'1,2'", "'1,x'")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        spark.sql(f"SELECT element_at({bad}, 1) AS v").collect()

@@ -42,3 +42,15 @@ def test_driver_contract_under_vanilla_session():
                        capture_output=True, text=True, timeout=600)
     assert "ALL-VANILLA-OK" in r.stdout, (
         f"stdout tail: {r.stdout[-2000:]}\nstderr tail: {r.stderr[-2000:]}")
+
+
+def test_default_driver_memory_fits_the_machine():
+    """A local master gets half of physical memory, capped at 24g, so a
+    test JVM on a small machine is not OOM-killed; a cluster driver
+    keeps 8g.  Pure sizing: starts no JVM."""
+    from nifi_datasynthesizer_spark.session import _default_driver_memory
+    gib = 2 ** 30
+    assert _default_driver_memory("local[4]", 15 * gib) == "7680m"
+    assert _default_driver_memory("local[*]", 256 * gib) == "24576m"
+    assert _default_driver_memory("local", 48 * gib) == "24576m"
+    assert _default_driver_memory("yarn", 15 * gib) == "8g"
